@@ -1,7 +1,9 @@
 package graft.api
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.connectors.AtomicDir
 
 /** Table-maintenance operations for partitioned fact stores — the jobs a
   * 100 TB deployment runs nightly: targeted backfill and small-file
@@ -53,61 +55,53 @@ object Maintenance {
     * retire the live root, then promote the staging dir. A crash between
     * them leaves no live directory, with the data intact under
     * `.retired_<name>` (recover by renaming it back); a crash before the
-    * first rename loses nothing (staging is invisible to readers). This is
-    * java.io.File-only — on an object store, publish the compacted data
-    * into a versioned subdir with a pointer swap (Publish's manifest
-    * discipline) instead of renaming the live root.
+    * first rename loses nothing (staging is invisible to readers). This
+    * relies on [[AtomicDir.promote]]'s atomic rename — on an object store,
+    * publish the compacted data into a versioned subdir with a pointer swap
+    * instead of renaming the live root.
     *
     * The streaming-ingest connection: per-micro-batch appends produce one
-    * small file per partition per batch (StreamingIvf, the parquet upsert
-    * sink), and scan cost at scale is dominated by file-open overhead once
-    * files ≪ the 128 MB split size — this job is how the layout recovers. */
+    * small file per partition per batch (StreamingIvf, SchemaReplicator's
+    * replica sink), and scan cost at scale is dominated by file-open
+    * overhead once files ≪ the 128 MB split size — this job is how the
+    * layout recovers. */
   def compactFiles(path: String, targetBytes: Long)
                   (implicit s: SparkSession): (Int, Int) = {
-    def parquetFiles(d: java.io.File): Seq[java.io.File] = {
-      val kids = Option(d.listFiles()).getOrElse(Array.empty).toIndexedSeq
-      kids.filter(_.isFile).filter(_.getName.endsWith(".parquet")) ++
-        kids.filter(_.isDirectory).flatMap(parquetFiles)
-    }
     // hive partition detection: walk first-child key=value directories down
     // the tree, collecting the partition-column chain
     @scala.annotation.tailrec
-    def partitionChain(d: java.io.File, acc: List[String]): List[String] = {
-      val dirs = Option(d.listFiles()).getOrElse(Array.empty).toIndexedSeq
-        .filter(_.isDirectory).filterNot(_.getName.startsWith("."))
+    def partitionChain(d: Path, acc: List[String]): List[String] = {
+      val dirs = AtomicDir.list(d, "").filterNot(_.getName.startsWith("."))
       dirs.headOption.map(_.getName.split("=", 2)) match {
         case Some(Array(k, _)) if dirs.forall(_.getName.startsWith(s"$k=")) =>
           partitionChain(dirs.head, acc :+ k)
         case _ => acc
       }
     }
-    val root = new java.io.File(path)
-    val before = parquetFiles(root)
-    require(before.nonEmpty, s"nothing to compact under $path")
-    val parts = partitionChain(root, Nil)
-    val totalBytes = before.map(_.length).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+    val root = new Path(path)
     val df = s.read.parquet(path)
+    // the scan's own file index: the data files (hidden `_`/`.` names
+    // skipped) and their total bytes on disk
+    val filesBefore = df.inputFiles.length
+    val parts = partitionChain(root, Nil)
+    val totalBytes = df.queryExecution.analyzed.stats.sizeInBytes
+    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val expectRows = df.count()
-    val staging = new java.io.File(root.getParentFile, s".compact_${root.getName}")
+    val staging = new Path(root.getParent, s".compact_${root.getName}")
     if (parts.isEmpty)
-      df.repartition(nOut).write.mode(SaveMode.Overwrite).parquet(staging.getPath)
+      df.repartition(nOut).write.mode(SaveMode.Overwrite).parquet(staging.toString)
     else
       df.repartition(parts.map(col): _*).write.mode(SaveMode.Overwrite)
-        .partitionBy(parts: _*).parquet(staging.getPath)
+        .partitionBy(parts: _*).parquet(staging.toString)
     // audit the staged rewrite before any destructive step
-    val gotRows = s.read.parquet(staging.getPath).count()
+    val gotRows = s.read.parquet(staging.toString).count()
     require(gotRows == expectRows,
       s"compaction row mismatch: staged $gotRows vs source $expectRows — aborted, source intact")
-    def rmRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmRec)
-      f.delete(); ()
-    }
-    val retired = new java.io.File(root.getParentFile, s".retired_${root.getName}")
-    if (retired.exists()) rmRec(retired)
-    require(root.renameTo(retired), s"could not retire $root")
-    require(staging.renameTo(root), s"swap failed: $staging -> $root")
-    rmRec(retired)
-    (before.size, parquetFiles(root).size)
+    val retired = new Path(root.getParent, s".retired_${root.getName}")
+    AtomicDir.remove(retired)
+    AtomicDir.promote(root, retired)
+    AtomicDir.promote(staging, root)
+    AtomicDir.remove(retired)
+    (filesBefore, s.read.parquet(path).inputFiles.length)
   }
 }

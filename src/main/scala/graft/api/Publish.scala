@@ -1,6 +1,8 @@
 package graft.api
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.connectors.AtomicDir
 
 /** Write–audit–publish: the commit protocol for dataset exports (k22's
   * shard prep, replica snapshots) — consumers must NEVER see a partial or
@@ -24,29 +26,22 @@ object Publish {
   def writeAuditPublish(df: DataFrame, dir: String,
                         audits: Seq[DataFrame => Option[String]])
                        (implicit s: SparkSession): Either[String, String] = {
-    val root = new java.io.File(dir)
-    root.mkdirs()
-    val staging = new java.io.File(root, "_staging")
-    val live = new java.io.File(root, "current")
-    val retired = new java.io.File(root, "_retired")
-    df.write.mode(SaveMode.Overwrite).parquet(staging.getPath)
-    val staged = s.read.parquet(staging.getPath)
+    val staging = new Path(dir, "_staging")
+    val live = new Path(dir, "current")
+    val retired = new Path(dir, "_retired")
+    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val staged = s.read.parquet(staging.toString)
     audits.view.flatMap(a => a(staged)).headOption match {
       case Some(reason) =>
-        Left(s"audit failed, staging retained at ${staging.getPath}: $reason")
+        Left(s"audit failed, staging retained at $staging: $reason")
       case None =>
         // retire-then-rename: two renames, each atomic; a crash between
         // them leaves no `current` (clearly unpublished), never a mix
-        def rmRec(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rmRec)
-          f.delete(); ()
-        }
-        if (retired.exists()) rmRec(retired)
-        if (live.exists()) require(live.renameTo(retired),
-          s"could not retire previous version at $live")
-        require(staging.renameTo(live), s"publish rename failed: $staging -> $live")
-        rmRec(retired)
-        Right(live.getPath)
+        AtomicDir.remove(retired)
+        if (AtomicDir.committed(live)) AtomicDir.promote(live, retired)
+        AtomicDir.promote(staging, live)
+        AtomicDir.remove(retired)
+        Right(live.toString)
     }
   }
 
@@ -116,11 +111,11 @@ object Publish {
   def distributionDrift(colName: String, publishedDir: String, tol: Double)
                        (implicit s: SparkSession): DataFrame => Option[String] =
     df => {
-      val live = new java.io.File(publishedDir, "current")
-      if (!live.exists()) None
+      val live = new Path(publishedDir, "current")
+      if (!AtomicDir.committed(live)) None
       else {
         val probs = (1 to 9).map(_ / 10.0).toArray
-        val ref = s.read.parquet(live.getPath).stat
+        val ref = s.read.parquet(live.toString).stat
           .approxQuantile(colName, probs, 0.01)
         val cur = df.stat.approxQuantile(colName, probs, 0.01)
         // approxQuantile returns an EMPTY array when the frame is empty or

@@ -1,16 +1,32 @@
 package graft.connectors
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.streaming.GroupState
 import org.apache.spark.sql.types.StructType
 
-/** Whole-schema replication: every table of a MySQL schema through ONE
-  * binlog stream into per-table ClickHouse-style replicas — the
-  * multi-table face of [[Replicator]] (which documents the single-table
-  * invariant this generalizes).
+/** End-to-end MySQL→ClickHouse-style replication of one table or a whole
+  * schema, composed from the library's parts:
   *
-  * Why one stream, not N [[Replicator]]s: the binlog is a single totally
+  *  1. [[bootstrapDdl]] — CREATE each sink table through the §1.2 type
+  *     matrix (ReplacingMergeTree versioned by the event timestamp, the
+  *     engine whose FINAL semantics equal our latest-per-key collapse);
+  *     schema changes mid-stream go through [[DdlPropagate]].
+  *  2. [[snapshotEvents]] — the initial bulk copy, expressed as synthetic
+  *     'c' events at position 0 so seed and tail share ONE code path (a
+  *     real deployment feeds both into the same stream, exactly like the
+  *     MemoryStream test does).
+  *  3. [[start]] — the continuous tail: latest-per-(table, key) state
+  *     machine (tombstones INCLUDED, so deletes reach the sink) into the
+  *     idempotent per-batch sink (replayed batch ids overwrite their own
+  *     output — at-least-once delivery collapses to exactly-once state,
+  *     the same contract a ReplacingMergeTree insert gives).
+  *  4. [[materializedState]] — read the committed batches back and
+  *     collapse, which is what ClickHouse's `FINAL` does at query time;
+  *     [[compact]] is the merge that bounds how many batches it reads.
+  *
+  * Why one stream, not one per table: the binlog is a single totally
   * ordered log; its row events interleave across tables but share the one
   * `position` sequence. Running per-table streams would need N checkpoints
   * whose positions drift apart — after a crash there is no single offset
@@ -24,36 +40,41 @@ import org.apache.spark.sql.types.StructType
   * Scale: state remains one row per live (table, key); the per-batch sink
   * partitions by table (directory per table per batch — the per-table
   * INSERT a ClickHouse sink would issue); adding a table adds state rows,
-  * not operators.
+  * not operators; the snapshot phase is a plain partitioned batch read
+  * (Jdbc.scala's partitionColumn bounds).
   *
-  * THE PER-TABLE INVARIANT (ConnectorsSpec, interleaved two-table
-  * scenario with deletes): for every table t,
-  * `materializedState(outDir, t) == CdcCollapse.effectiveState(log where
-  * table = t)` — fan-out must not leak events across tables or lose the
-  * single-table guarantees.
+  * THE REPLICATOR INVARIANT (ConnectorsSpec, over MemoryStream, one table
+  * and two interleaved tables with deletes): for every table t,
+  * `materializedState(outDir, t) == CdcCollapse.effectiveState(snapshot ++
+  * log where table = t)` — the streamed, checkpointed, batch-committed
+  * pipeline must land in exactly the state a from-scratch log replay
+  * computes, deletes included, and fan-out must not leak events across
+  * tables.
   */
 object SchemaReplicator {
 
-  /** CREATE TABLE per schema table, through the same §1.2 type matrix as
-    * the single-table bootstrap ([[Replicator.bootstrapDdl]]); mid-stream
-    * DDL keeps flowing through [[DdlPropagate]] per table. */
+  /** CREATE TABLE per schema table: versioned ReplacingMergeTree keyed by
+    * the replication key — FINAL on this table IS latestPerKey. */
   def bootstrapDdl(tables: Map[String, (StructType, Seq[String])]): Map[String, String] =
     tables.map { case (t, (schema, orderBy)) =>
-      t -> Replicator.bootstrapDdl(t, schema, orderBy)
+      t -> ClickHouseDdl.createTable(
+        t, schema, ClickHouseDdl.ReplacingMergeTree(Some("tsMicros")), orderBy)
     }
 
-  /** Snapshot rows of one table as synthetic creates at position 0 — same
-    * seed-and-tail-share-one-path convention as [[Replicator.snapshotEvents]]. */
+  /** Snapshot rows of one table as synthetic creates at position 0 / ts 0:
+    * any real binlog event for the key (position ≥ 1) wins over the seed,
+    * so snapshot-then-tail needs no fencing. */
   def snapshotEvents(table: String, rows: Dataset[(Long, String)])
                     (implicit s: SparkSession): Dataset[TableCdcEvent] = {
     import s.implicits._
     rows.map { case (key, payload) => TableCdcEvent(table, key, 0L, 0L, "c", payload) }
   }
 
-  /** Latest-per-(table, key) streaming state machine — the multi-table
-    * sibling of StreamOps.latestPerKeyStream, same newest-wins /
-    * emit-only-on-change rules, tombstones included so deletes reach
-    * every table's sink. */
+  /** Latest-per-(table, key) streaming state machine — the same
+    * newest-wins / emit-only-on-change rules as StreamOps.latestPerKeyTws,
+    * tombstones included so deletes reach every table's sink. It stays on
+    * flatMapGroupsWithState and the default state store (transformWithState
+    * would require the RocksDB provider). */
   def latestPerTableKeyStream(events: Dataset[TableCdcEvent])
                              (implicit s: SparkSession): Dataset[TableCdcEvent] = {
     import s.implicits._
@@ -86,20 +107,18 @@ object SchemaReplicator {
       }
       .start()
 
-  private def committedBatches(outDir: String): Seq[String] =
-    Option(new java.io.File(outDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
-      .map(_.getPath).toIndexedSeq
+  /** The batch directories a reader may trust: only COMMITTED ones
+    * (`_SUCCESS` present). A micro-batch still being written is invisible
+    * until its commit, so [[compact]] can neither fold nor delete it. */
+  private def committedBatches(outDir: String): Seq[Path] =
+    AtomicDir.list(new Path(outDir), "batch_").filter(AtomicDir.committed)
 
-  /** All committed batches as one frame (with the `table` partition
-    * column). Each batch root is its own partitioned dataset, so each is
-    * read against its own basePath and the batches union — batch count is
+  /** The given batches as one frame (with the `table` partition column).
+    * Each batch root is its own partitioned dataset, so each is read
+    * against its own basePath and the batches union — batch count is
     * bounded by compaction in a real deployment, and per-table filters
     * still prune to `table=t` directories inside every batch. */
-  private def readCommitted(outDir: String)
-                           (implicit s: SparkSession): Option[org.apache.spark.sql.DataFrame] = {
-    val batches = committedBatches(outDir)
+  private def read(batches: Seq[Path])(implicit s: SparkSession): Option[DataFrame] =
     if (batches.isEmpty) None
     else {
       // explicit schema: an all-no-op micro-batch commits an EMPTY batch dir
@@ -109,10 +128,13 @@ object SchemaReplicator {
         org.apache.spark.sql.Encoders.product[CdcEvent].schema.fields :+
         org.apache.spark.sql.types.StructField(
           "table", org.apache.spark.sql.types.StringType))
-      Some(batches.map(b => s.read.schema(sch).option("basePath", b).parquet(b))
+      Some(batches.map(_.toString)
+        .map(b => s.read.schema(sch).option("basePath", b).parquet(b))
         .reduce(_.unionByName(_)))
     }
-  }
+
+  private def readCommitted(outDir: String)(implicit s: SparkSession): Option[DataFrame] =
+    read(committedBatches(outDir))
 
   /** One table's replica state: read the committed batches, restrict to the
     * table (partition pruning — the scan lists only `table=t` directories),
@@ -152,11 +174,12 @@ object SchemaReplicator {
     * event and thus not retained); resuming from the regressed watermark
     * re-pulls events the latest-wins collapse already absorbs — safe by
     * the replicator invariant. */
-  def compact(outDir: String)(implicit s: SparkSession): Unit =
-    readCommitted(outDir) match {
+  def compact(outDir: String)(implicit s: SparkSession): Unit = {
+    // ONE listing: exactly the batches read here are the ones deleted below
+    val before = committedBatches(outDir)
+    read(before) match {
       case None => ()
       case Some(df) =>
-        val before = committedBatches(outDir)
         val latest = df
           .groupBy(org.apache.spark.sql.functions.col("table"),
                    org.apache.spark.sql.functions.col("key"))
@@ -169,16 +192,14 @@ object SchemaReplicator {
                   org.apache.spark.sql.functions.col("__e.op").as("op"),
                   org.apache.spark.sql.functions.col("__e.payload").as("payload"),
                   org.apache.spark.sql.functions.col("table"))
-        val tmp = new java.io.File(outDir, ".compact_tmp")
-        latest.write.mode("overwrite").partitionBy("table")
-          .parquet(tmp.getPath)
+        val tmp = new Path(outDir, ".compact_tmp")
+        latest.write.mode("overwrite").partitionBy("table").parquet(tmp.toString)
         // the time-travel horizon this compaction establishes: every event
         // at position <= horizon may have been folded away, so PITR below
         // it is unanswerable. Computed over the PRE-fold history (the
         // retained max can regress — see committedPosition note) and
-        // stamped as a hidden marker file inside the batch (underscore
-        // prefix: parquet dir scans skip it) BEFORE the rename, so the
-        // marker and the fold become visible atomically together.
+        // stamped into the compacted batch's NAME, so the horizon and the
+        // fold become visible atomically with the one rename.
         // coalesce to 0 (the committedPosition convention): committed
         // batches can hold zero rows, and a bare max would be NULL —
         // getLong on it NPEs mid-compaction, after tmp is written
@@ -187,33 +208,26 @@ object SchemaReplicator {
             org.apache.spark.sql.functions.max("position"),
             org.apache.spark.sql.functions.lit(0L)))
           .collect().head.getLong(0)
-        val prior = compactionHorizon(outDir)
-        new java.io.File(tmp, s"_horizon_${math.max(horizon, prior)}").createNewFile()
-        val gen = before.map(b => new java.io.File(b).getName)
-          .flatMap(n => "\\d+".r.findFirstIn(n)).map(_.toLong)
+        val prior = horizonOf(before)
+        val gen = before.flatMap(b => "\\d+".r.findFirstIn(b.getName)).map(_.toLong)
           .foldLeft(0L)(math.max)
         // gen+1 so a re-compaction (whose input includes the previous
         // compacted dir) never renames onto an existing name
-        val target = new java.io.File(outDir, s"batch_${gen + 1}_compacted")
-        require(tmp.renameTo(target), s"compaction rename failed: $tmp -> $target")
-        def rmRec(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rmRec)
-          f.delete(); ()
-        }
-        before.foreach(b => rmRec(new java.io.File(b)))
+        AtomicDir.promote(tmp, new Path(outDir,
+          s"batch_${gen + 1}_compacted_h${math.max(horizon, prior)}"))
+        before.foreach(AtomicDir.remove)
     }
+  }
+
+  private def horizonOf(batches: Seq[Path]): Long =
+    batches.flatMap(b => "_compacted_h(\\d+)$".r.findFirstMatchIn(b.getName))
+      .map(_.group(1).toLong).foldLeft(0L)(math.max)
 
   /** The replica's compaction horizon: the highest binlog position any
     * [[compact]] run has folded history up to (0 = never compacted).
     * Point-in-time reads BELOW the horizon are unanswerable — the events
     * that distinguish those states were merged away. */
-  def compactionHorizon(outDir: String): Long =
-    committedBatches(outDir).flatMap { b =>
-      Option(new java.io.File(b).listFiles()).getOrElse(Array.empty)
-        .map(_.getName).collect {
-          case n if n.startsWith("_horizon_") => n.stripPrefix("_horizon_").toLong
-        }
-    }.foldLeft(0L)(math.max)
+  def compactionHorizon(outDir: String): Long = horizonOf(committedBatches(outDir))
 
   /** Point-in-time replica read: one table's effective state as of binlog
     * position `maxPosition` INCLUSIVE — the collapse of the committed log

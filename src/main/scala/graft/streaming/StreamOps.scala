@@ -1,10 +1,11 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-import graft.connectors.CdcEvent
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
+  TimeMode, TimerValues, ValueState}
+import graft.connectors.{AtomicDir, CdcEvent}
 
 /** SURVEY §2.2 streaming surface — true unbounded execution.
   *
@@ -48,37 +49,13 @@ object StreamOps {
       .select(col("user_id"), col("session_window.start").as("s_start"),
               col("session_window.end").as("s_end"), col("n_events"))
 
-  /** Stateful latest-per-key upsert over a CDC stream: emits the new
-    * effective row whenever a key's latest event changes. By default
-    * tombstoned keys emit nothing further (a pure upsert view); with
-    * `emitTombstones` the winning delete event itself is emitted so a
-    * downstream sink can collapse the key away (the shape a replicator
-    * needs — see graft.connectors.Replicator, whose materialized-state
-    * invariant depends on deletes reaching the sink). The state machine
-    * mirrors CdcCollapse exactly. */
-  def latestPerKeyStream(events: Dataset[CdcEvent], emitTombstones: Boolean = false)
-                        (implicit s: SparkSession): Dataset[CdcEvent] = {
-    import s.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CdcEvent, CdcEvent](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, incoming: Iterator[CdcEvent], state: GroupState[CdcEvent]) =>
-          val newest = (state.getOption.iterator ++ incoming)
-            .maxBy(e => (e.tsMicros, e.position))
-          val changed = state.getOption.forall(prev =>
-            (newest.tsMicros, newest.position) != (prev.tsMicros, prev.position))
-          state.update(newest)
-          if (changed && (emitTombstones || newest.op != "d")) Iterator.single(newest)
-          else Iterator.empty
-      }
-  }
-
-  /** The same latest-per-key state machine on Spark 4's transformWithState
-    * API (the successor to flatMapGroupsWithState: named state variables,
-    * TTL, timers; requires the RocksDB state store provider). Kept
-    * behaviorally identical to [[latestPerKeyStream]] — the StreamingSpec
-    * drives both through the same scenario.
+  /** Stateful latest-per-key upsert over a CDC stream, on Spark 4's
+    * transformWithState API (named state variables, TTL, timers; requires
+    * the RocksDB state store provider): emits the new effective row
+    * whenever a key's latest event changes. By default tombstoned keys emit
+    * nothing further (a pure upsert view); with `emitTombstones` the
+    * winning delete event itself is emitted so a downstream sink can
+    * collapse the key away. The state machine mirrors CdcCollapse exactly.
     *
     * `ttl` bounds state for long-running CDC streams with churn: without it,
     * tombstoned ('d') keys park a ValueState entry forever. Production
@@ -106,7 +83,7 @@ object StreamOps {
     }
   }
 
-  /** latestPerKeyStream via transformWithState (needs
+  /** The latest-per-key upsert view (needs
     * `spark.sql.streaming.stateStore.providerClass` = RocksDB provider).
     * A non-NONE `ttl` requires processing-time semantics, so TimeMode
     * follows the TTL choice. */
@@ -136,22 +113,6 @@ object StreamOps {
       .join(right.withWatermark("r_ts", lateness),
             expr(s"user_id = r_user AND r_ts <= ts AND r_ts >= ts - interval $window_"))
 
-  /** Exactly-once-effective sink: foreachBatch + idempotent per-batch
-    * parquet commit (a replayed batchId overwrites its own directory, so
-    * at-least-once delivery collapses to exactly-once output — the same
-    * contract a ReplacingMergeTree insert gives the ClickHouse sink). */
-  def startParquetUpsertSink(df: DataFrame, outDir: String,
-                             checkpointDir: String,
-                             mode: OutputMode = OutputMode.Update)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .outputMode(mode)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-      }
-      .start()
-
   /** One micro-batch step of streaming MV maintenance: merge the batch's
     * partial-aggregate delta into the state AS OF the previous batch and
     * write it as `state_v<batchId>`. Versioning by batchId is what makes
@@ -180,23 +141,17 @@ object StreamOps {
       case None => delta
     }
     // write-audit-publish (the repo's Publish discipline): materialize into
-    // a dot-prefixed temp dir (invisible to the version regex AND to
-    // Spark's file listing), then rename into place — on a local FS the
-    // rename is atomic, so a concurrent readMv sees either the old state
-    // or the complete new one, never a partially-written directory. (On an
-    // object store, swap the rename for the store's commit protocol.)
-    def rmRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmRec)
-      f.delete(); ()
-    }
-    val tmp = new java.io.File(stateDir, s".state_v${batchId}_tmp")
-    if (tmp.exists()) rmRec(tmp)
-    merged.write.mode("overwrite").parquet(tmp.getPath)
-    val target = new java.io.File(stateDir, s"state_v$batchId")
-    if (target.exists()) rmRec(target) // replayed batch: replace wholesale
-    require(tmp.renameTo(target), s"atomic state publish failed: $tmp -> $target")
+    // a dot-prefixed temp dir (invisible to the version listing AND to
+    // Spark's file listing), then rename into place — the rename is
+    // atomic, so a concurrent readMv sees either the old state or the
+    // complete new one, never a partially-written directory
+    val tmp = new Path(stateDir, s".state_v${batchId}_tmp")
+    merged.write.mode("overwrite").parquet(tmp.toString)
+    val target = new Path(stateDir, s"state_v$batchId")
+    AtomicDir.remove(target) // replayed batch: replace wholesale
+    AtomicDir.promote(tmp, target)
     versions.filter(v => prev.exists(v < _)).foreach(v =>
-      rmRec(new java.io.File(stateDir, s"state_v$v")))
+      AtomicDir.remove(new Path(stateDir, s"state_v$v")))
   }
 
   /** State versions under `stateDir` whose directory carries the
@@ -204,12 +159,9 @@ object StreamOps {
     * place. A crashed or in-flight writer leaves either a dot-prefixed
     * temp dir (not matched) or a markerless dir (filtered here), so
     * readers can never resolve a torn version. */
-  private def committedVersions(stateDir: String): IndexedSeq[Long] =
-    Option(new java.io.File(stateDir).listFiles())
-      .getOrElse(Array.empty).toIndexedSeq
-      .flatMap(f => "^state_v(\\d+)$".r.findFirstMatchIn(f.getName)
-                      .map(m => m.group(1).toLong))
-      .filter(v => new java.io.File(stateDir, s"state_v$v/_SUCCESS").exists())
+  private def committedVersions(stateDir: String): Seq[Long] =
+    AtomicDir.list(new Path(stateDir), "state_v").filter(AtomicDir.committed)
+      .flatMap(p => "^state_v(\\d+)$".r.findFirstMatchIn(p.getName).map(_.group(1).toLong))
 
   /** Streaming incremental MV maintenance — the end-to-end form of the
     * i09/i10 batch algebra: each micro-batch is aggregated ALONE (one hash

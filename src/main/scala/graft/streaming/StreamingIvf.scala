@@ -1,8 +1,10 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.connectors.AtomicDir
 
 /** Streaming IVF ingest: route each arriving vector to its nearest
   * centroid and land it in the cid-partitioned layout the batch probe
@@ -76,24 +78,21 @@ object StreamingIvf {
   def publishCentroids(centroids: Seq[(Long, Seq[Double])], dir: String)
                       (implicit s: SparkSession): Int = {
     import s.implicits._
-    val root = new java.io.File(dir)
-    root.mkdirs()
     val next = latestCentroidVersion(dir).getOrElse(0) + 1
-    val staging = new java.io.File(root, s".staging_v$next")
+    val staging = new Path(dir, s".staging_v$next")
     centroids.toDF("cid", "embedding").coalesce(1)
-      .write.mode("overwrite").parquet(staging.getPath)
-    val target = new java.io.File(root, s"v=$next")
-    require(staging.renameTo(target), s"centroid publish rename failed: $staging -> $target")
+      .write.mode("overwrite").parquet(staging.toString)
+    AtomicDir.promote(staging, new Path(dir, s"v=$next"))
     next
   }
 
-  /** Highest published version in `dir`, if any. */
-  def latestCentroidVersion(dir: String): Option[Int] = {
-    val vs = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("v="))
+  /** The published (committed) versions in `dir`. */
+  private def centroidVersions(dir: String): Seq[Int] =
+    AtomicDir.list(new Path(dir), "v=").filter(AtomicDir.committed)
       .map(_.getName.stripPrefix("v=").toInt)
-    if (vs.isEmpty) None else Some(vs.max)
-  }
+
+  /** Highest published version in `dir`, if any. */
+  def latestCentroidVersion(dir: String): Option[Int] = centroidVersions(dir).maxOption
 
   /** Load one published version as the driver-side constant [[route]] takes. */
   def loadCentroids(dir: String, version: Int)
@@ -138,10 +137,7 @@ object StreamingIvf {
       val n = math.sqrt(c.map(x => x * x).sum)
       if (n == 0) 0.0 else c.zip(pn).map { case (a, b) => a * b }.sum / n
     }
-    val versions = Option(new java.io.File(centroidsDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("v="))
-      .map(_.getName.stripPrefix("v=").toInt)
+    val versions = centroidVersions(centroidsDir)
     require(versions.nonEmpty, s"no centroid versions under $centroidsDir")
     val allowed = versions.flatMap { v =>
       loadCentroids(centroidsDir, v)
@@ -149,7 +145,7 @@ object StreamingIvf {
         .sortBy { case (sc, cid) => (-sc, cid) }
         .take(nprobe)
         .map { case (_, cid) => s"$v:$cid" }
-    }.toSeq
+    }
     val probeCol = graft.api.Similarity.normalize(
       typedLit(pn.map(_.toFloat)).cast("array<float>"))
     store

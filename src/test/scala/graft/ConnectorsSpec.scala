@@ -161,17 +161,18 @@ class ConnectorsSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
+    // the one-table case of SchemaReplicator
     val outDir = java.nio.file.Files.createTempDirectory("repl_out").toString
     val ckDir = java.nio.file.Files.createTempDirectory("repl_ck").toString
-    val seed = Replicator.snapshotEvents(
+    val seed = SchemaReplicator.snapshotEvents("t",
       Seq((1L, "a1"), (2L, "b1"), (3L, "c1")).toDS()).collect().toSeq
     val tail = Seq(
-      CdcEvent(2, 10, 1000, "u", "b2"), // update wins over seed
-      CdcEvent(3, 11, 1100, "d", ""),   // delete must reach the sink
-      CdcEvent(4, 12, 1200, "c", "d1")) // key born after the snapshot
-    val stale = CdcEvent(2, 9, 900, "u", "stale") // late event: no effect
-    val in = MemoryStream[CdcEvent]
-    val q = Replicator.start(in.toDS(), outDir, ckDir)
+      TableCdcEvent("t", 2, 10, 1000, "u", "b2"), // update wins over seed
+      TableCdcEvent("t", 3, 11, 1100, "d", ""),   // delete must reach the sink
+      TableCdcEvent("t", 4, 12, 1200, "c", "d1")) // key born after the snapshot
+    val stale = TableCdcEvent("t", 2, 9, 900, "u", "stale") // late event: no effect
+    val in = MemoryStream[TableCdcEvent]
+    val q = SchemaReplicator.start(in.toDS(), outDir, ckDir)
     try {
       in.addData(seed: _*)
       q.processAllAvailable()
@@ -180,16 +181,16 @@ class ConnectorsSpec extends SparkSpec {
       in.addData(stale)
       q.processAllAvailable()
     } finally q.stop()
-    val mat = Replicator.materializedState(outDir).collect()
+    val mat = SchemaReplicator.materializedState(outDir, "t").collect()
       .map(e => e.key -> e.payload).toMap
     val replay = graft.connectors.CdcCollapse.effectiveState(
-      (seed ++ tail :+ stale).toDS())
+      (seed ++ tail :+ stale).map(_.untagged).toDS())
       .collect().map(e => e.key -> e.payload).toMap
     assert(mat == replay, s"sink state $mat != log replay $replay")
     assert(mat == Map(1L -> "a1", 2L -> "b2", 4L -> "d1"),
       "update applied, delete collapsed, post-snapshot key present")
-    val ddl = Replicator.bootstrapDdl("sink_t",
-      org.apache.spark.sql.Encoders.product[CdcEvent].schema, Seq("key"))
+    val ddl = SchemaReplicator.bootstrapDdl(Map("sink_t" ->
+      (org.apache.spark.sql.Encoders.product[CdcEvent].schema, Seq("key"))))("sink_t")
     assert(ddl.contains("ENGINE = ReplacingMergeTree(tsMicros)"))
     assert(ddl.contains("`key` Int64"))
   }
@@ -200,120 +201,161 @@ class ConnectorsSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("schema_out").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("schema_ck").toString
-    // a nothing-committed-yet replica is empty and resumes from position 0
-    assert(SchemaReplicator.materializedState(outDir, "users").collect().isEmpty)
-    assert(SchemaReplicator.committedPosition(outDir) == 0L)
-    val seed =
-      SchemaReplicator.snapshotEvents("users",
-        Seq((1L, "u1"), (2L, "u2")).toDS()).collect().toSeq ++
-      SchemaReplicator.snapshotEvents("orders",
-        Seq((1L, "o1"), (3L, "o3")).toDS()).collect().toSeq
-    // ONE log, positions interleaving across tables; same key (1) lives in
-    // both tables and must never cross-contaminate
-    val tail = Seq(
-      TableCdcEvent("users", 2, 10, 1000, "u", "u2b"),   // update users.2
-      TableCdcEvent("orders", 1, 11, 1100, "d", ""),     // delete orders.1
-      TableCdcEvent("users", 4, 12, 1200, "c", "u4"),    // post-snapshot key
-      TableCdcEvent("orders", 3, 13, 1300, "u", "o3b"),  // update orders.3
-      TableCdcEvent("users", 1, 9, 900, "u", "u1b"))     // any binlog event beats the pos-0 seed
+    // the replica path as a plain path and as a `file://` URI: both must list
+    // and commit through the same filesystem Spark writes with
+    for (asUri <- Seq(false, true)) {
+      val local = java.nio.file.Files.createTempDirectory("schema_out").toString
+      val outDir = if (asUri) s"file://$local" else local
+      val ckDir = java.nio.file.Files.createTempDirectory("schema_ck").toString
+      // a nothing-committed-yet replica is empty and resumes from position 0
+      assert(SchemaReplicator.materializedState(outDir, "users").collect().isEmpty)
+      assert(SchemaReplicator.committedPosition(outDir) == 0L)
+      val seed =
+        SchemaReplicator.snapshotEvents("users",
+          Seq((1L, "u1"), (2L, "u2")).toDS()).collect().toSeq ++
+        SchemaReplicator.snapshotEvents("orders",
+          Seq((1L, "o1"), (3L, "o3")).toDS()).collect().toSeq
+      // ONE log, positions interleaving across tables; same key (1) lives in
+      // both tables and must never cross-contaminate
+      val tail = Seq(
+        TableCdcEvent("users", 2, 10, 1000, "u", "u2b"),   // update users.2
+        TableCdcEvent("orders", 1, 11, 1100, "d", ""),     // delete orders.1
+        TableCdcEvent("users", 4, 12, 1200, "c", "u4"),    // post-snapshot key
+        TableCdcEvent("orders", 3, 13, 1300, "u", "o3b"),  // update orders.3
+        TableCdcEvent("users", 1, 9, 900, "u", "u1b"))     // any binlog event beats the pos-0 seed
+      val in = MemoryStream[TableCdcEvent]
+      val q = SchemaReplicator.start(in.toDS(), outDir, ckDir)
+      try {
+        in.addData(seed: _*)
+        q.processAllAvailable()
+        in.addData(tail: _*)
+        q.processAllAvailable()
+        // a batch where nothing changes commits EMPTY (no partition dirs) —
+        // reading the replica must survive it
+        in.addData(TableCdcEvent("users", 2, 8, 800, "u", "older"))
+        q.processAllAvailable()
+      } finally q.stop()
+      // per-table invariant: materialized ≡ that table's log replay
+      val log = (seed ++ tail :+ TableCdcEvent("users", 2, 8, 800, "u", "older")).toDS()
+      for (t <- Seq("users", "orders")) {
+        val mat = SchemaReplicator.materializedState(outDir, t)
+          .collect().map(e => e.key -> e.payload).toMap
+        val replay = CdcCollapse.effectiveState(
+            log.filter(_.table == t).map(_.untagged))
+          .collect().map(e => e.key -> e.payload).toMap
+        assert(mat == replay, s"table $t at $outDir: sink $mat != log replay $replay")
+      }
+      assert(SchemaReplicator.materializedState(outDir, "users")
+        .collect().map(e => e.key -> e.payload).toMap ==
+        Map(1L -> "u1b", 2L -> "u2b", 4L -> "u4"),
+        "users: update applied, post-snapshot key present, binlog event beats seed")
+      assert(SchemaReplicator.materializedState(outDir, "orders")
+        .collect().map(e => e.key -> e.payload).toMap == Map(3L -> "o3b"),
+        "orders: delete collapsed, update applied, users events never leaked")
+      // the shared resume watermark is the schema-wide max committed position
+      assert(SchemaReplicator.committedPosition(outDir) == 13L)
+      // point-in-time reads: every log prefix is a consistent snapshot
+      def usersAt(p: Long) = SchemaReplicator.materializedStateAt(outDir, "users", p)
+        .collect().map(e => e.key -> e.payload).toMap
+      assert(usersAt(0) == Map(1L -> "u1", 2L -> "u2"), "position 0 = the snapshot")
+      assert(usersAt(10) == Map(1L -> "u1b", 2L -> "u2b"),
+        "position 10 sees both updates but not the pos-12 create")
+      assert(SchemaReplicator.materializedStateAt(outDir, "orders", 10)
+        .collect().map(e => e.key -> e.payload).toMap == Map(1L -> "o1", 3L -> "o3"),
+        "position 10 predates the orders delete at 11")
+      // compaction: many batch dirs → one, with BOTH tables' states and the
+      // watermark preserved, and tombstones RETAINED in the compacted rows
+      // (the read-time collapse needs them to stay delete-proof under replay)
+      val statesBefore = Seq("users", "orders").map(t =>
+        t -> SchemaReplicator.materializedState(outDir, t)
+          .collect().map(e => e.key -> e.payload).toMap).toMap
+      SchemaReplicator.compact(outDir)
+      val dirs = new java.io.File(local).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
+      assert(dirs.length == 1, s"expected one compacted batch, got ${dirs.toSeq}")
+      for (t <- Seq("users", "orders"))
+        assert(SchemaReplicator.materializedState(outDir, t)
+          .collect().map(e => e.key -> e.payload).toMap == statesBefore(t),
+          s"compaction must not change $t's effective state")
+      assert(SchemaReplicator.committedPosition(outDir) == 13L)
+      assert(spark.read.parquet(dirs.head.getPath)
+        .where(org.apache.spark.sql.functions.col("op") === "d").count() == 1,
+        "the orders delete tombstone must survive compaction")
+      // and compacting twice is a no-op-shaped fixpoint
+      SchemaReplicator.compact(outDir)
+      assert(SchemaReplicator.materializedState(outDir, "users")
+        .collect().map(e => e.key -> e.payload).toMap == statesBefore("users"))
+      // i08↔compact interplay: compaction folded history up to position 13,
+      // so the pos-10 point-in-time read that worked above must now REFUSE —
+      // filtering the folded batch by position would fabricate a state that
+      // never existed (e.g. users.2's pre-horizon event u2b was merged away)
+      assert(SchemaReplicator.compactionHorizon(outDir) == 13L,
+        "compaction must record the folded-up-to position")
+      val behind = intercept[IllegalArgumentException] { usersAt(10) }
+      assert(behind.getMessage.contains("behind the compaction horizon 13"),
+        s"PITR behind the horizon must fail loudly, got: ${behind.getMessage}")
+      // at (and beyond) the horizon PITR still answers, and answers exactly
+      assert(usersAt(13) == statesBefore("users"),
+        "PITR at the horizon = the compacted state")
+      assert(SchemaReplicator.materializedStateAt(outDir, "orders", 99)
+        .collect().map(e => e.key -> e.payload).toMap == statesBefore("orders"),
+        "PITR beyond the horizon reads the live state")
+      // per-table DDL bootstrap through the shared type matrix
+      val ddl = SchemaReplicator.bootstrapDdl(Map(
+        "users" -> (org.apache.spark.sql.Encoders.product[CdcEvent].schema, Seq("key")),
+        "orders" -> (org.apache.spark.sql.Encoders.product[CdcEvent].schema, Seq("key"))))
+      assert(ddl.keySet == Set("users", "orders"))
+      assert(ddl("users").contains("CREATE TABLE users") ||
+             ddl("users").contains("users"))
+      assert(ddl.values.forall(_.contains("ENGINE = ReplacingMergeTree(tsMicros)")))
+    }
+  }
+
+  test("materializedState of a replica with no committed batch is empty") {
+    implicit val s = spark
+    // before the first micro-batch lands, the batch_* listing matches
+    // nothing — that is an empty replica, not an AnalysisException
+    val freshDir = java.nio.file.Files.createTempDirectory("repl_empty").toString
+    assert(SchemaReplicator.materializedState(freshDir, "t").collect().isEmpty)
+    // and a dir that does not exist at all behaves the same
+    assert(SchemaReplicator.materializedState(freshDir + "/never_created", "t")
+      .collect().isEmpty)
+  }
+
+  test("SchemaReplicator: a batch without _SUCCESS is neither read nor compacted away") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val sp = spark
+    import sp.implicits._
+    implicit val s = spark
+    implicit val sq = spark.sqlContext
+    val outDir = java.nio.file.Files.createTempDirectory("uncommitted_out").toString
+    val ckDir = java.nio.file.Files.createTempDirectory("uncommitted_ck").toString
+    val first = Seq(TableCdcEvent("t", 1, 1, 100, "c", "a1"),
+                    TableCdcEvent("t", 2, 2, 200, "c", "b1"))
+    val second = Seq(TableCdcEvent("t", 1, 3, 300, "u", "a2"),
+                     TableCdcEvent("t", 3, 4, 400, "c", "c1"))
     val in = MemoryStream[TableCdcEvent]
     val q = SchemaReplicator.start(in.toDS(), outDir, ckDir)
     try {
-      in.addData(seed: _*)
+      in.addData(first: _*)
       q.processAllAvailable()
-      in.addData(tail: _*)
-      q.processAllAvailable()
-      // a batch where nothing changes commits EMPTY (no partition dirs) —
-      // reading the replica must survive it
-      in.addData(TableCdcEvent("users", 2, 8, 800, "u", "older"))
+      in.addData(second: _*)
       q.processAllAvailable()
     } finally q.stop()
-    // per-table invariant: materialized ≡ that table's log replay
-    val log = (seed ++ tail :+ TableCdcEvent("users", 2, 8, 800, "u", "older")).toDS()
-    for (t <- Seq("users", "orders")) {
-      val mat = SchemaReplicator.materializedState(outDir, t)
-        .collect().map(e => e.key -> e.payload).toMap
-      val replay = CdcCollapse.effectiveState(
-          log.filter(_.table == t).map(_.untagged))
-        .collect().map(e => e.key -> e.payload).toMap
-      assert(mat == replay, s"table $t: sink $mat != log replay $replay")
-    }
-    assert(SchemaReplicator.materializedState(outDir, "users")
-      .collect().map(e => e.key -> e.payload).toMap ==
-      Map(1L -> "u1b", 2L -> "u2b", 4L -> "u4"),
-      "users: update applied, post-snapshot key present, binlog event beats seed")
-    assert(SchemaReplicator.materializedState(outDir, "orders")
-      .collect().map(e => e.key -> e.payload).toMap == Map(3L -> "o3b"),
-      "orders: delete collapsed, update applied, users events never leaked")
-    // the shared resume watermark is the schema-wide max committed position
-    assert(SchemaReplicator.committedPosition(outDir) == 13L)
-    // point-in-time reads: every log prefix is a consistent snapshot
-    def usersAt(p: Long) = SchemaReplicator.materializedStateAt(outDir, "users", p)
+    def state = SchemaReplicator.materializedState(outDir, "t").collect()
+      .map(e => e.key -> e.payload).toMap
+    // batch_1 as a writer still in flight sees it: data files, no marker yet
+    val marker = new java.io.File(outDir, "batch_1/_SUCCESS")
+    assert(marker.delete(), s"expected a committed batch_1 under $outDir")
+    assert(state == Map(1L -> "a1", 2L -> "b1"), "an uncommitted batch must not be read")
+    SchemaReplicator.compact(outDir)
+    assert(new java.io.File(outDir, "batch_1").isDirectory,
+      "compaction must not delete a batch it did not fold")
+    // the writer commits: every event is accounted for exactly once
+    assert(marker.createNewFile())
+    val replay = CdcCollapse.effectiveState((first ++ second).map(_.untagged).toDS())
       .collect().map(e => e.key -> e.payload).toMap
-    assert(usersAt(0) == Map(1L -> "u1", 2L -> "u2"), "position 0 = the snapshot")
-    assert(usersAt(10) == Map(1L -> "u1b", 2L -> "u2b"),
-      "position 10 sees both updates but not the pos-12 create")
-    assert(SchemaReplicator.materializedStateAt(outDir, "orders", 10)
-      .collect().map(e => e.key -> e.payload).toMap == Map(1L -> "o1", 3L -> "o3"),
-      "position 10 predates the orders delete at 11")
-    // compaction: many batch dirs → one, with BOTH tables' states and the
-    // watermark preserved, and tombstones RETAINED in the compacted rows
-    // (the read-time collapse needs them to stay delete-proof under replay)
-    val statesBefore = Seq("users", "orders").map(t =>
-      t -> SchemaReplicator.materializedState(outDir, t)
-        .collect().map(e => e.key -> e.payload).toMap).toMap
-    SchemaReplicator.compact(outDir)
-    val dirs = new java.io.File(outDir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
-    assert(dirs.length == 1, s"expected one compacted batch, got ${dirs.toSeq}")
-    for (t <- Seq("users", "orders"))
-      assert(SchemaReplicator.materializedState(outDir, t)
-        .collect().map(e => e.key -> e.payload).toMap == statesBefore(t),
-        s"compaction must not change $t's effective state")
-    assert(SchemaReplicator.committedPosition(outDir) == 13L)
-    assert(spark.read.parquet(dirs.head.getPath)
-      .where(org.apache.spark.sql.functions.col("op") === "d").count() == 1,
-      "the orders delete tombstone must survive compaction")
-    // and compacting twice is a no-op-shaped fixpoint
-    SchemaReplicator.compact(outDir)
-    assert(SchemaReplicator.materializedState(outDir, "users")
-      .collect().map(e => e.key -> e.payload).toMap == statesBefore("users"))
-    // i08↔compact interplay: compaction folded history up to position 13,
-    // so the pos-10 point-in-time read that worked above must now REFUSE —
-    // filtering the folded batch by position would fabricate a state that
-    // never existed (e.g. users.2's pre-horizon event u2b was merged away)
-    assert(SchemaReplicator.compactionHorizon(outDir) == 13L,
-      "compaction must record the folded-up-to position")
-    val behind = intercept[IllegalArgumentException] { usersAt(10) }
-    assert(behind.getMessage.contains("behind the compaction horizon 13"),
-      s"PITR behind the horizon must fail loudly, got: ${behind.getMessage}")
-    // at (and beyond) the horizon PITR still answers, and answers exactly
-    assert(usersAt(13) == statesBefore("users"),
-      "PITR at the horizon = the compacted state")
-    assert(SchemaReplicator.materializedStateAt(outDir, "orders", 99)
-      .collect().map(e => e.key -> e.payload).toMap == statesBefore("orders"),
-      "PITR beyond the horizon reads the live state")
-    // per-table DDL bootstrap through the shared type matrix
-    val ddl = SchemaReplicator.bootstrapDdl(Map(
-      "users" -> (org.apache.spark.sql.Encoders.product[CdcEvent].schema, Seq("key")),
-      "orders" -> (org.apache.spark.sql.Encoders.product[CdcEvent].schema, Seq("key"))))
-    assert(ddl.keySet == Set("users", "orders"))
-    assert(ddl("users").contains("CREATE TABLE users") ||
-           ddl("users").contains("users"))
-    assert(ddl.values.forall(_.contains("ENGINE = ReplacingMergeTree(tsMicros)")))
-  }
-
-  test("Replicator.materializedState of a replica with no committed batch is empty") {
-    implicit val s = spark
-    // before the first micro-batch lands, the batch_* glob matches nothing —
-    // that is an empty replica, not an AnalysisException
-    val freshDir = java.nio.file.Files.createTempDirectory("repl_empty").toString
-    assert(Replicator.materializedState(freshDir).collect().isEmpty)
-    // and a dir that does not exist at all behaves the same (listFiles null)
-    assert(Replicator.materializedState(freshDir + "/never_created")
-      .collect().isEmpty)
+    assert(state == replay, s"replica $state != log replay $replay")
   }
 
   test("dirty CDC ingest end-to-end: corrupt lines quarantine, clean lines replicate") {
@@ -342,13 +384,14 @@ class ConnectorsSpec extends SparkSpec {
     assert(clean.count() == good.size)
     val outDir = java.nio.file.Files.createTempDirectory("dirty_out").toString
     val ckDir = java.nio.file.Files.createTempDirectory("dirty_ck").toString
-    val in = MemoryStream[CdcEvent]
-    val q = Replicator.start(in.toDS(), outDir, ckDir)
+    val in = MemoryStream[TableCdcEvent]
+    val q = SchemaReplicator.start(in.toDS(), outDir, ckDir)
     try {
-      in.addData(clean.collect().toSeq: _*)
+      in.addData(clean.collect().toSeq
+        .map(e => TableCdcEvent("t", e.key, e.position, e.tsMicros, e.op, e.payload)): _*)
       q.processAllAvailable()
     } finally q.stop()
-    val mat = Replicator.materializedState(outDir).collect()
+    val mat = SchemaReplicator.materializedState(outDir, "t").collect()
       .map(e => e.key -> e.payload).toMap
     assert(mat == Map(1L -> "a2"), "update applied, tombstoned key gone, corrupt rows absent")
   }

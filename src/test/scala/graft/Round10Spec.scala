@@ -93,14 +93,20 @@ class Round10Spec extends SparkSpec {
     assert(!pass1.contains("SinglePartition"),
            s"no single-partition exchange allowed in pass 1:\n$pass1")
     // … and the output plan must (a) consume ONE stored pass-1 evaluation
-    // — the structural reuse the checkpoint buys: exactly one scan leaf,
-    // which is the checkpointed RDD — and (b) still never collapse to a
+    // — the structural reuse the checkpoint buys: every leaf is a scan of
+    // the same checkpointed RDD (one leaf per consumer, two consumers) and
+    // nothing re-scans the source — and (b) still never collapse to a
     // single partition anywhere in pass 2.
     val out = DistributedRank.midranks2(src, Seq("g"), "v")
     val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD") || plan.contains("LogicalRDD") ||
-           plan.contains("Scan ExistingRDD"),
-           s"pass 2 should read the checkpointed pass-1 frame:\n$plan")
+    val leaves = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectLeaves(out.queryExecution.executedPlan)
+    val stored = leaves.collect {
+      case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd.id
+    }
+    assert(stored.size == leaves.size && stored.distinct.size == 1,
+           s"pass 2 should read only the checkpointed pass-1 frame, one stored RDD; " +
+           s"leaves ${leaves.map(_.nodeName)} over RDDs ${stored.distinct}:\n$plan")
     assert(!plan.contains("SinglePartition"),
            s"no single-partition exchange allowed:\n$plan")
     assert(!plan.toLowerCase.contains("rangepartitioning"),

@@ -96,7 +96,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState latest-per-key matches the flatMapGroupsWithState semantics") {
+  test("latestPerKeyTws emits only effective changes; tombstones suppressed") {
     val sp = spark
     import sp.implicits._
     implicit val s = spark
@@ -277,27 +277,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("stateful latest-per-key upsert emits only effective changes") {
-    val sp = spark
-    import sp.implicits._
-    implicit val s = spark
-    implicit val sq = spark.sqlContext
-    val in = MemoryStream[CdcEvent]
-    val q = StreamOps.latestPerKeyStream(in.toDS()).writeStream
-      .format("memory").queryName("upsert_t").outputMode(OutputMode.Append).start()
-    try {
-      in.addData(CdcEvent(1, 10, 1000, "c", "v1"), CdcEvent(2, 11, 1000, "c", "w1"))
-      q.processAllAvailable()
-      in.addData(CdcEvent(1, 12, 2000, "u", "v2")) // newer → emit
-      in.addData(CdcEvent(2, 9, 500, "u", "stale")) // older → suppressed
-      q.processAllAvailable()
-      val emitted = spark.table("upsert_t").collect()
-        .map(r => (r.getAs[Long]("key"), r.getAs[String]("payload")))
-      assert(emitted.count(_._1 == 1L) == 2) // v1 then v2
-      assert(emitted.filter(_._1 == 2L).map(_._2).toSeq == Seq("w1")) // stale never emitted
-    } finally q.stop()
-  }
-
   test("stream-stream interval join enriches within the window only") {
     val sp = spark
     import sp.implicits._
@@ -348,23 +327,6 @@ class StreamingSpec extends SparkSpec {
       Seq((3L, "c")).toDF("id", "v").coalesce(1).write.mode("append").parquet(inDir)
       q.processAllAvailable()
       assert(spark.table("tail_t").count() == 3)
-    } finally q.stop()
-  }
-
-  test("foreachBatch parquet sink writes idempotent per-batch output") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("sink_s").toString
-    val in = MemoryStream[Ev]
-    val q = StreamOps.startParquetUpsertSink(
-      in.toDF().withWatermark("ts", "1 minute"), s"$dir/out", s"$dir/ckpt")
-    try {
-      in.addData(Ev(1, 1, ts(0), 1.0), Ev(2, 2, ts(1), 2.0))
-      q.processAllAvailable()
-      val batches = new java.io.File(s"$dir/out").listFiles().filter(_.getName.startsWith("batch_"))
-      assert(batches.nonEmpty)
-      assert(spark.read.parquet(batches.head.getPath).count() == 2)
     } finally q.stop()
   }
 
